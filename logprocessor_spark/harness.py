@@ -56,6 +56,7 @@ from .operators.dedup import (
 )
 from .operators.route import route
 from .operators.similarity import cosine, cosine_knn_join, cosine_topk, lsh_ann_topk
+from .operators.sketch import BLOOM_K, BLOOM_M
 from .synth import default_rules
 
 # ---------------------------------------------------------------------------
@@ -3459,7 +3460,7 @@ def q_bloom_crawl_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BLOOM_SQL_BIT = (
-    "(('0x' || substr(md5('b{r}:' || {key}), 1, 15))::BIGINT % 4096)"
+    "(('0x' || substr(md5('b{r}:' || {key}), 1, 15))::BIGINT % " + str(BLOOM_M) + ")"
 )
 
 SQL_BLOOM_CRAWL_PROBE = f"""
@@ -3469,12 +3470,12 @@ WITH urls AS (
   FROM documents
 ), bits AS (
   SELECT DISTINCT unnest([
-    {", ".join(_BLOOM_SQL_BIT.format(r=r, key="url") for r in range(4))}
+    {", ".join(_BLOOM_SQL_BIT.format(r=r, key="url") for r in range(BLOOM_K))}
   ]) AS bit
   FROM urls WHERE doc_id % 2 = 0
 )
 SELECT u.doc_id, u.url,
-  ({" AND ".join(_BLOOM_SQL_BIT.format(r=r, key="u.url") + " IN (SELECT bit FROM bits)" for r in range(4))})
+  ({" AND ".join(_BLOOM_SQL_BIT.format(r=r, key="u.url") + " IN (SELECT bit FROM bits)" for r in range(BLOOM_K))})
   AS maybe_member
 FROM urls u
 """

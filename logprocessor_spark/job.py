@@ -182,6 +182,7 @@ def run_pipeline(
 
     prior_commits = bool(done)
     for batch in _chunks(pending, group_size or len(pending)):
+        t_batch = time.time()
         src = pages.where(F.col("dt").isin(batch))
         if use_pandas_parse:
             parsed = parse_pages_pandas(src, extra_cols=["dt"])
@@ -215,7 +216,8 @@ def run_pipeline(
         # Spark job at all (a count job costs ~2-4 s of pure scheduling per
         # batch; at 10^4 batches that is hours of fixed cost)
         stats = _committed_counts(spark, f"{out_dir}/routed", set(batch))
-        wall_ms = int((time.time() - t0) * 1000)
+        # this batch's own wall: the metrics and heartbeat rows are per batch
+        wall_ms = int((time.time() - t_batch) * 1000)
         per_dt_in: dict[str, int] = {}
         per_dt_out: dict[str, int] = {}
         metric_rows = []

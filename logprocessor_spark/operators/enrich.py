@@ -12,6 +12,11 @@ already enforced at parse time for the detail *columns*; here the agent-dim
 attributes (detail_kind, is_request) are joined unconditionally, mirroring
 the reference's header merge which always happens.
 
+The default dims (``synth.gen_geo_dim``/``gen_agent_dim``) are driver-local
+relations that plan as ``LocalTableScan``: their rows already sit in the
+JVM, so building the broadcast runs no Python worker (it is still one
+small JVM job per dim).
+
 At 100 TB: dims are a few MB (hosts dictionary, msg-type registry) — always
 broadcast. If a dim ever outgrows the broadcast threshold, switch that one
 join to a shuffled join keyed on the dim PK; the API here doesn't change.

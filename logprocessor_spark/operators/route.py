@@ -28,7 +28,9 @@ def compile_rules(rules: DataFrame) -> F.Column:
 
     Rules are collected to the driver (they are config, a handful of rows —
     the analog of the reference's dispatch table) and compiled into a
-    native expression so routing is codegen'd, not a join.
+    native expression so routing is codegen'd, not a join. The default
+    rules (``synth.default_rules``) are a ``LocalTableScan``, so this
+    collect runs no Spark job.
     """
     collected = sorted(rules.collect(), key=lambda r: r.rule_id)
     expr: F.Column | None = None

@@ -60,6 +60,12 @@ def get_spark(
         # keys and sink paths must round-trip byte-stable
         .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
         .config("spark.ui.enabled", "false")
+        # DataFrame-debugging call-site capture wraps every PySpark API
+        # call in ~5 extra driver<->JVM round trips (active-session lookup,
+        # conf read, origin set/clear): about 1,200 per pipeline call, close
+        # to half of its py4j traffic. Pass it as extra_conf to get Python
+        # call sites in DataFrame error messages while debugging.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 PARTITION_COLS = ["sink", "month", "dt"]
@@ -91,7 +92,32 @@ def write_fanout(
             dedup_key,
             dts=batch_dts,
             committed_scope=committed_scope,
+            schema=cleaned.schema,
         )
+
+
+def _month_roots(spark: SparkSession, path: str, dts: list[str] | None) -> list[str]:
+    """``sink=*/month=*`` directories holding any day of ``dts`` (every
+    day when None), from ONE Hadoop-FS ``globStatus`` over the Hive
+    layout: the same call serves local and remote filesystems, runs no
+    Spark job and reads no data pages. The matched paths come back as one
+    newline-joined string: a JVM round trip per path would cost more than
+    the glob itself once a batch spans dozens of partitions."""
+    if dts is not None and not dts:
+        return []
+    days = "*" if dts is None else "{" + ",".join(dts) + "}"
+    jvm = spark._jvm
+    pattern = jvm.org.apache.hadoop.fs.Path(f"{path}/sink=*/month=*/dt={days}")
+    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    hits = fs.globStatus(pattern)
+    if not hits:
+        return []
+    # genericWrapArray takes the Path[] as a plain Object (py4j does not
+    # pass a Path[] where a Java API declares Object[])
+    joined = jvm.scala.Predef.genericWrapArray(
+        jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(hits)
+    ).mkString("\n")
+    return sorted({p.rsplit("/", 1)[0] for p in joined.split("\n")})
 
 
 def reconcile_cross_day_dupes(
@@ -100,6 +126,8 @@ def reconcile_cross_day_dupes(
     dedup_key: str = "message_id",
     dts: list[str] | None = None,
     committed_scope: bool = False,
+    *,
+    schema: StructType,
 ) -> int:
     """Collapse duplicate ids that landed under DIFFERENT ingest days of
     the same (sink, month) — the cross-day half of the monthly upsert.
@@ -111,12 +139,17 @@ def reconcile_cross_day_dupes(
       against any PREVIOUSLY COMMITTED day of the batch's (sink, month)
       combos — the reference's ES upsert dedupes against everything
       already indexed (es.clj:102-104). The scan widens only to the
-      affected months: combos come from the batch days' partition values
-      (no data pages), then the detection prunes on (sink, month).
-      Latest ``dt`` still wins, so a replayed id keeps the newer copy and
-      the older committed day's partition is rewritten. Per-day ledger
-      counts recorded by the earlier run become historical, not current
-      — exactly an upsert's bookkeeping.
+      affected months. Latest ``dt`` still wins, so a replayed id keeps
+      the newer copy and the older committed day's partition is
+      rewritten. Per-day ledger counts recorded by the earlier run become
+      historical, not current — exactly an upsert's bookkeeping.
+
+    The scan covers only the month roots that hold a batch day, found by
+    one ``globStatus`` of ``sink=*/month=*/dt={dts}`` (``_month_roots``)
+    and read with ``basePath`` so sink/month/dt stay partition columns.
+    ``schema`` is the schema of the written rows, partition columns
+    included, so the read infers nothing and the only Spark job of the
+    common case is the detection scan itself.
 
     Works off the *written* table, so the detection scan reads only the
     pruned (sink, month, dt, key) columns — three of them partition values
@@ -125,26 +158,19 @@ def reconcile_cross_day_dupes(
     exist, only the affected day-partitions are rewritten via dynamic
     overwrite (localCheckpoint breaks the read-own-output cycle on a
     row set that is rare-case small). Returns #rows removed."""
-    # pin dt to string: Hive partition-type inference yields DATE, which
-    # would break the isin prune below and change the rewrite's dir names
-    sunk = spark.read.parquet(path).withColumn("dt", F.col("dt").cast("string"))
-    if dts is not None:
-        batch_scan = sunk.where(F.col("dt").isin(dts))
-        if committed_scope:
-            # (sink, month) combos touched by the batch: partition values
-            # only — this collect reads zero data pages
-            combos = [
-                (r.sink, r.month)
-                for r in batch_scan.select("sink", "month").distinct().collect()
-            ]
-            if not combos:
-                return 0
-            sm = F.struct("sink", "month")
-            sunk = sunk.where(
-                sm.isin([F.struct(F.lit(s), F.lit(m)) for s, m in combos])
-            )
-        else:
-            sunk = batch_scan
+    roots = _month_roots(spark, path, dts)
+    if not roots:
+        return 0
+    # pin dt to string: a caller's dt may be typed DATE, which would break
+    # the isin prune below and change the rewrite's dir names
+    sunk = (
+        spark.read.schema(schema)
+        .option("basePath", path)
+        .parquet(*roots)
+        .withColumn("dt", F.col("dt").cast("string"))
+    )
+    if dts is not None and not committed_scope:
+        sunk = sunk.where(F.col("dt").isin(dts))
     narrow = sunk.select("sink", "month", "dt", dedup_key)
     losers = (
         narrow.where(F.col(dedup_key).isNotNull())

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .schema import AGENT_DIM_SCHEMA, GEO_DIM_SCHEMA, RULES_SCHEMA
 
@@ -215,10 +216,30 @@ def write_pages_partitioned(pages: DataFrame, path: str) -> None:
     )
 
 
+def _local_relation(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """A driver-local relation built from a ``pyarrow.Table``: it plans as
+    ``LocalTableScan``, so collecting it runs no Spark job and
+    broadcasting it runs no Python worker (``createDataFrame(list)``
+    builds a Python-RDD scan, which costs a Python task wave per use). A
+    ``pyarrow.Table`` takes the Arrow path whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says."""
+    import pyarrow as pa
+
+    cols = {f.name: [r[i] for r in rows] for i, f in enumerate(schema.fields)}
+    return spark.createDataFrame(pa.table(cols), schema)
+
+
 def gen_geo_dim(spark: SparkSession, n_hosts: int = 1000, coverage: float = 0.9) -> DataFrame:
     """host -> (country, region); ~coverage of hosts present so left-join
-    misses exercise the dispatch-miss analog (FIXTURES §3)."""
-    df = spark.range(n_hosts).where(F.pmod(F.xxhash64("id"), 10) < int(coverage * 10))
+    misses exercise the dispatch-miss analog (FIXTURES §3). The hash
+    expressions run over a driver-local id relation, so Catalyst folds the
+    whole dim into one ``LocalTableScan``."""
+    ids = _local_relation(
+        spark,
+        [(i,) for i in range(n_hosts)],
+        T.StructType([T.StructField("id", T.LongType(), False)]),
+    )
+    df = ids.where(F.pmod(F.xxhash64("id"), 10) < int(coverage * 10))
     country = F.element_at(
         F.array(*[F.lit(c) for c in COUNTRIES]),
         (F.pmod(F.xxhash64("id", F.lit(1)), len(COUNTRIES)) + 1).cast("int"),
@@ -242,7 +263,7 @@ def gen_agent_dim(spark: SparkSession) -> DataFrame:
         ("TravelItineraryReadRS", None, False),
         ("OTA_PingRS", None, False),
     ]
-    return spark.createDataFrame(rows, AGENT_DIM_SCHEMA)
+    return _local_relation(spark, rows, AGENT_DIM_SCHEMA)
 
 
 def default_rules(spark: SparkSession) -> DataFrame:
@@ -257,4 +278,4 @@ def default_rules(spark: SparkSession) -> DataFrame:
         (6, "msg_type", "OTA_PingRS", "sink_ping"),
         (7, "*", "*", "sink_misc"),
     ]
-    return spark.createDataFrame(rows, RULES_SCHEMA)
+    return _local_relation(spark, rows, RULES_SCHEMA)

@@ -5,6 +5,12 @@ import pytest
 from logprocessor_spark.session import get_spark
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: end-to-end tests that start a separate JVM (spark-submit)"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="lp-tests", master="local[4]", shuffle_partitions=4)

@@ -136,6 +136,30 @@ def test_ledger_and_metrics(spark, pipe):
     assert agg.p == N and agg.q == res.quarantined
 
 
+def test_batch_wall_ms_is_the_batch_own_time(spark, tmp_path):
+    """Metrics and heartbeat ``wall_ms`` time each batch on its own, not
+    since the run started: over >=2 batches they sum to at most the run."""
+    from logprocessor_spark.progress import ProgressTracker, read_heartbeats
+
+    base = str(tmp_path)
+    write_pages_partitioned(gen_pages(spark, 300, seed=9), f"{base}/pages")
+    dts = sorted(p.name.split("=", 1)[1] for p in (tmp_path / "pages").glob("dt=*"))
+    tracker = ProgressTracker(spark, run_id="walls", out_dir=f"{base}/out")
+    res = run_pipeline(
+        spark, f"{base}/pages", f"{base}/out", run_id="walls",
+        partitions=dts[:3], group_size=1, progress=tracker,
+    )
+    per_batch = {
+        r.partition_key: r.wall_ms
+        for r in read_metrics(spark, f"{base}/out/metrics").collect()
+    }
+    assert len(per_batch) == 3
+    assert sum(per_batch.values()) <= res.wall_ms
+    hbs = read_heartbeats(spark, f"{base}/out").collect()
+    assert len(hbs) == 3
+    assert sum(h.wall_ms for h in hbs) <= res.wall_ms
+
+
 def test_read_path(spark, pipe):
     base, _ = pipe
     routed = read_sink(spark, f"{base}/out/routed")
