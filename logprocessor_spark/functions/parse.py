@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import PARSED_SCHEMA
+from ..session import session_memo
 from .textextract import extract_text_col, extract_text_py
 from .timestamps import clean_ts_col, clean_ts_py
 
@@ -83,7 +84,23 @@ def parse_pages(
     """Native-expression parse: pages(url, warc_ts, html, text, lang) ->
     PARSED_SCHEMA columns (+ ``extra_cols`` passed through, e.g. the
     partition key ``dt``). One projection; Catalyst prunes unused inputs.
+
+    The projection's column list is built once per session and
+    ``(with_text, extra_cols)`` (``session.session_memo``): it is the same
+    expression tree for every batch, and building it costs ~200
+    driver<->JVM round trips.
     """
+    extras = tuple(extra_cols or ())
+    cols = session_memo(
+        pages.sparkSession,
+        ("parse_pages", with_text, extras),
+        lambda: _parse_columns(with_text, extras),
+    )
+    return pages.select(*cols)
+
+
+def _parse_columns(with_text: bool, extra_cols: tuple[str, ...]) -> tuple[Column, ...]:
+    """``parse_pages``' output columns, in PARSED_SCHEMA order."""
     s = F.decode(F.col("html"), "UTF-8")
     # section scoping (see pattern-table comment): one marker search splits
     # the document; subexpression elimination evaluates head/body once even
@@ -127,9 +144,9 @@ def parse_pages(
         cols["detail_id"],
     )
 
-    out = pages.select(
-        "url",
-        "lang",
+    return (
+        F.col("url"),
+        F.col("lang"),
         _nullify(F.regexp_extract("url", HOST_PATTERN, 1)).alias("host"),
         cols["session_id"].alias("session_id"),
         cols["message_id"].alias("message_id"),
@@ -144,9 +161,8 @@ def parse_pages(
         detail_id.alias("detail_id"),
         (extract_text_col(F.col("html")) if with_text else F.col("text")).alias("text"),
         error.alias("error"),
-        *[F.col(c) for c in (extra_cols or [])],
+        *[F.col(c) for c in extra_cols],
     )
-    return out
 
 
 # --- Arrow-batched parity path -------------------------------------------

@@ -12,6 +12,12 @@ message_id dedup). ``group_size`` bounds the checkpoint granularity:
 smaller = finer resume, larger = fewer job rounds. Run it standalone via
 ``spark-submit --py-files logprocessor_spark.zip -m`` or import
 ``run_pipeline``.
+
+Per-call fixed cost: the plan parts that do not change between calls
+(default dims, the routing Column compiled from the default rules, the
+parse projection) are built once per SparkSession, and the pages are read
+with the declared schema, so planning a call runs no Spark job and few
+driver<->JVM round trips.
 """
 
 from __future__ import annotations
@@ -19,16 +25,28 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .checkpoint import Ledger, append_metrics
 from .functions.parse import parse_pages, parse_pages_pandas
 from .operators.aggregate import sink_aggregates
 from .operators.enrich import enrich
-from .operators.route import route
+from .operators.route import compile_rules, route
+from .schema import PAGES_SCHEMA
+from .session import session_memo
 from .sinks import write_fanout
 from .synth import default_rules, gen_agent_dim, gen_geo_dim
+
+# the pages as run_pipeline reads them: the declared columns plus the
+# Hive partition key, typed string so ledger keys and routed partitions
+# are stable whatever the session's partition-type inference says
+PAGES_READ_SCHEMA = StructType(
+    [*PAGES_SCHEMA.fields, StructField("dt", StringType(), True)]
+)
+# pages columns the parse reads (with_text=True extracts text from html)
+_PARSE_INPUT_COLS = ("url", "lang", "html")
 
 
 @dataclass
@@ -77,7 +95,7 @@ def _committed_counts(
     if force_remote or ("://" in path and not path.startswith("file:")):
         # Hive partition-type inference types dt as DATE; pin to string so
         # the isin prune matches and ledger/metrics keys stay StringType
-        # (same reason the pages read pins dt at the top of run_pipeline).
+        # (same reason PAGES_READ_SCHEMA declares dt a string).
         return (
             spark.read.parquet(path)
             .withColumn("dt", F.col("dt").cast("string"))
@@ -128,6 +146,69 @@ def _discover_partitions(pages_path: str) -> list[str] | None:
     return dts or None
 
 
+@dataclass(frozen=True)
+class _Defaults:
+    geo_dim: DataFrame
+    agent_dim: DataFrame
+    routing: Column  # compile_rules(default_rules(spark))
+
+
+def _session_defaults(spark: SparkSession) -> _Defaults:
+    """The default dims and the routing Column compiled from the default
+    rules, built once per session: they are constants (the reference's
+    in-code dispatch and routing tables, utils.clj:21-25, es.clj:99-104),
+    and rebuilding them cost a few hundred driver<->JVM round trips per
+    call."""
+    return session_memo(
+        spark,
+        "run_pipeline.defaults",
+        lambda: _Defaults(
+            gen_geo_dim(spark), gen_agent_dim(spark), compile_rules(default_rules(spark))
+        ),
+    )
+
+
+def _check_pages_columns(spark: SparkSession, pages_path: str) -> None:
+    """Raise ``ValueError`` unless a data file of ``pages_path`` holds every
+    column the parse reads (and ``dt``, when it is not a directory key).
+
+    The pages are read with ``PAGES_READ_SCHEMA``, which infers nothing:
+    a missing column would read as nulls and quarantine every row instead
+    of failing. This reads one file's footer through the Hadoop FS API
+    (``listFiles``, then ``ParquetFileReader``): no Spark job, no data
+    pages. Files and directories whose names start with ``_`` or ``.``
+    are skipped, as Spark's own listing skips them."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    root = jvm.org.apache.hadoop.fs.Path(pages_path)
+    fs = root.getFileSystem(conf)
+    prefix = fs.makeQualified(root).toString().rstrip("/") + "/"
+    files = fs.listFiles(root, True)
+    while files.hasNext():
+        status = files.next()
+        rel = status.getPath().toString()[len(prefix):].split("/")
+        if not any(p.startswith(("_", ".")) for p in rel):
+            break
+    else:
+        raise ValueError(f"no data file under {pages_path}")
+    need = list(_PARSE_INPUT_COLS)
+    if not any(p.startswith("dt=") for p in rel[:-1]):
+        need.append("dt")
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf)
+    )
+    try:
+        schema = reader.getFileMetaData().getSchema()
+        missing = [c for c in need if not schema.containsField(c)]
+    finally:
+        reader.close()
+    if missing:
+        raise ValueError(
+            f"pages table {pages_path} lacks column(s) {missing} "
+            f"(checked {'/'.join(rel)})"
+        )
+
+
 def run_pipeline(
     spark: SparkSession,
     pages_path: str,
@@ -142,17 +223,24 @@ def run_pipeline(
     progress: "ProgressTracker | None" = None,
 ) -> PipelineResult:
     """Process all pending day-partitions of ``pages_path`` into
-    ``out_dir/{routed,ledger,metrics}``. Deterministic, resumable."""
-    t0 = time.time()
-    geo_dim = geo_dim if geo_dim is not None else gen_geo_dim(spark)
-    agent_dim = agent_dim if agent_dim is not None else gen_agent_dim(spark)
-    rules = rules if rules is not None else default_rules(spark)
+    ``out_dir/{routed,ledger,metrics}``. Deterministic, resumable.
 
-    # Hive partition inference types dt as date; pin to string so ledger
-    # keys and routed output partitions are stable across readers.
-    pages = spark.read.parquet(pages_path).withColumn(
-        "dt", F.col("dt").cast("string")
-    )
+    ``geo_dim``, ``agent_dim`` and ``rules`` default to the synthetic
+    dims and rules (``synth``); the defaults, and the routing Column
+    compiled from the default rules, are built once per SparkSession and
+    reused by later calls. A ``rules`` table passed in is collected and
+    compiled on every call. The pages are read with ``PAGES_READ_SCHEMA``
+    (no schema-inference job); one footer check makes a table without a
+    column the parse needs raise ``ValueError`` before anything is
+    written."""
+    t0 = time.time()
+    defaults = _session_defaults(spark)
+    geo_dim = geo_dim if geo_dim is not None else defaults.geo_dim
+    agent_dim = agent_dim if agent_dim is not None else defaults.agent_dim
+    routing = defaults.routing if rules is None else compile_rules(rules)
+
+    pages = spark.read.schema(PAGES_READ_SCHEMA).parquet(pages_path)
+    _check_pages_columns(spark, pages_path)
     ledger = Ledger(f"{out_dir}/ledger")
     done = ledger.done_partitions()
     available = _discover_partitions(pages_path) or sorted(
@@ -189,7 +277,7 @@ def run_pipeline(
         else:
             parsed = parse_pages(src, extra_cols=["dt"])
         enriched = enrich(parsed, geo_dim, agent_dim)
-        routed = route(enriched, rules).drop("html")
+        routed = route(enriched, routing).drop("html")
 
         batch_key = f"{batch[0]}..{batch[-1]}"
         if progress is not None:

@@ -15,7 +15,8 @@ the reference's header merge which always happens.
 The default dims (``synth.gen_geo_dim``/``gen_agent_dim``) are driver-local
 relations that plan as ``LocalTableScan``: their rows already sit in the
 JVM, so building the broadcast runs no Python worker (it is still one
-small JVM job per dim).
+small JVM job per dim). ``job.run_pipeline`` builds them once per
+SparkSession and passes the same DataFrames to every call.
 
 At 100 TB: dims are a few MB (hosts dictionary, msg-type registry) — always
 broadcast. If a dim ever outgrows the broadcast threshold, switch that one

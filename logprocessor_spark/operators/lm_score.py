@@ -205,9 +205,14 @@ def bucket_by_thresholds(
 def import_arpa(spark, path: str) -> DataFrame:
     """Parse the \\2-grams section of an ARPA-format LM file into the
     (w1, w2, p_kn_e9) relation ``score_documents`` consumes — the
-    pretrained-model import seam (KenLM/SRILM both emit ARPA).
+    pretrained-model import seam (KenLM/SRILM both emit ARPA). Only the
+    bigram section is read: the unigram and any higher-order sections
+    are ignored, as are backoff weights and rows that are not a bigram.
 
-    ARPA rows are ``log10(p)<TAB>w1 w2[<TAB>backoff]``. The log10 value
+    ARPA rows are ``log10(p)<TAB>w1 w2[<TAB>backoff]``. The relation has
+    one row per (w1, w2): a key repeated in the section raises
+    ``ValueError`` naming it, because ``score_documents`` joins on the key
+    and a second row would count that bigram twice. The log10 value
     is converted on the DRIVER (the model file is a model, not data — at
     most a few GB, read once): p_e9 = round(10^log10p * 1e9), clamped to
     [1, 1e9]. Driver-side float use is fine here; determinism of the
@@ -215,6 +220,7 @@ def import_arpa(spark, path: str) -> DataFrame:
     source of truth.
     """
     rows = []
+    seen: set[tuple[str, str]] = set()
     in_2grams = False
     with open(path, encoding="utf-8") as fh:
         for line in fh:
@@ -233,6 +239,10 @@ def import_arpa(spark, path: str) -> DataFrame:
             toks = parts[1].split(" ")
             if len(toks) != 2:
                 continue
+            key = (toks[0], toks[1])
+            if key in seen:
+                raise ValueError(f"{path}: bigram {' '.join(key)!r} repeated in \\2-grams:")
+            seen.add(key)
             p_e9 = round((10.0 ** lp) * 1e9)
             p_e9 = max(1, min(1_000_000_000, int(p_e9)))
             rows.append((toks[0], toks[1], p_e9))

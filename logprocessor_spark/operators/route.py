@@ -17,7 +17,7 @@ happen: sink partitions derive from the data itself.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 QUARANTINE = "quarantine"
@@ -30,7 +30,9 @@ def compile_rules(rules: DataFrame) -> F.Column:
     the analog of the reference's dispatch table) and compiled into a
     native expression so routing is codegen'd, not a join. The default
     rules (``synth.default_rules``) are a ``LocalTableScan``, so this
-    collect runs no Spark job.
+    collect runs no Spark job. ``job.run_pipeline`` compiles the default
+    rules once per session and reuses the Column; rules a caller passes
+    in are collected and compiled on every call.
     """
     collected = sorted(rules.collect(), key=lambda r: r.rule_id)
     expr: F.Column | None = None
@@ -46,17 +48,18 @@ def compile_rules(rules: DataFrame) -> F.Column:
     return expr.otherwise(F.lit(default))
 
 
-def route(parsed: DataFrame, rules: DataFrame) -> DataFrame:
-    """Add ``sink`` and ``month`` routing columns.
+def route(parsed: DataFrame, rules: DataFrame | Column) -> DataFrame:
+    """Add ``sink`` and ``month`` routing columns. ``rules`` is a rules
+    table or a routing Column already built by ``compile_rules``.
 
     * error rows (parse failures) -> quarantine sink, month from warc-date
       when the parsed ts is unusable (quarantine rows may have null ts).
     * clean rows -> first matching rule; month = date_format(ts,'yyyy.MM')
       (F11, es.clj:104).
     """
-    sink = F.when(F.col("error").isNotNull(), F.lit(QUARANTINE)).otherwise(
-        compile_rules(rules)
-    )
+    if isinstance(rules, DataFrame):
+        rules = compile_rules(rules)
+    sink = F.when(F.col("error").isNotNull(), F.lit(QUARANTINE)).otherwise(rules)
     month = F.coalesce(
         F.date_format("ts", "yyyy.MM"), F.lit("unknown")
     )

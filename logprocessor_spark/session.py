@@ -13,8 +13,12 @@ Design notes (100 TB / 1000-executor posture, tested on local[N]):
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Hashable
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+
+_T = TypeVar("_T")
 
 
 def get_spark(
@@ -71,3 +75,19 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def session_memo(spark: SparkSession, key: Hashable, build: Callable[[], _T]) -> _T:
+    """``build()``, run once per ``spark`` session and ``key``; later calls
+    return the same object.
+
+    For plan parts that are constant for a session (default dims, the
+    compiled default routing rule, the parse projection): building them
+    costs hundreds of driver<->JVM round trips, reusing them costs none.
+    The memo lives on the session object itself, so a new or restarted
+    session (``getOrCreate`` after ``stop``) builds fresh objects and the
+    old ones go with the old session."""
+    memo = spark.__dict__.setdefault("_logprocessor_memo", {})
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]

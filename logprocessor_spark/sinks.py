@@ -154,7 +154,8 @@ def reconcile_cross_day_dupes(
     Works off the *written* table, so the detection scan reads only the
     pruned (sink, month, dt, key) columns — three of them partition values
     that cost no data pages — never re-running parse. The common case (no
-    cross-day duplicates) is exactly that one narrow scan; when losers
+    cross-day duplicates) is exactly that one narrow scan, one aggregation
+    stage (``min(dt) != max(dt)``) plus the ``isEmpty`` job; when losers
     exist, only the affected day-partitions are rewritten via dynamic
     overwrite (localCheckpoint breaks the read-own-output cycle on a
     row set that is rare-case small). Returns #rows removed."""
@@ -172,15 +173,15 @@ def reconcile_cross_day_dupes(
     if dts is not None and not committed_scope:
         sunk = sunk.where(F.col("dt").isin(dts))
     narrow = sunk.select("sink", "month", "dt", dedup_key)
+    # an id sits under more than one day iff its min and max dt differ
+    # (both ignore a null dt, as a distinct count does); min/max aggregate
+    # in one exchange, where a distinct count needs two
     losers = (
         narrow.where(F.col(dedup_key).isNotNull())
         .groupBy("sink", "month", dedup_key)
-        .agg(
-            F.max("dt").alias("__keep_dt"),
-            F.countDistinct("dt").alias("__nd"),
-        )
-        .where(F.col("__nd") > 1)
-        .drop("__nd")
+        .agg(F.min("dt").alias("__min_dt"), F.max("dt").alias("__keep_dt"))
+        .where(F.col("__min_dt") != F.col("__keep_dt"))
+        .drop("__min_dt")
         .persist()
     )
     # common case — no cross-day duplicates — exits after exactly one

@@ -219,6 +219,21 @@ def test_import_arpa_empty_and_malformed(spark, docs, tmp_path):
     assert scored[1].nll_sum_fx16 == scored[1].n_bigrams * LOG2_1E9_FX16
 
 
+def test_import_arpa_rejects_repeated_bigram(spark, tmp_path):
+    """A repeated (w1, w2) key would fan out score_documents' join and
+    count that bigram twice: the import names the key and raises."""
+    arpa = tmp_path / "dup.arpa"
+    arpa.write_text(
+        "\\data\\\nngram 1=2\nngram 2=3\n"
+        "\n\\1-grams:\n-0.5\ta\n-0.7\tb\n"
+        "\n\\2-grams:\n-0.3\ta b\n-1.0\tb a\n-0.4\ta b\n"
+        "\n\\end\\\n",
+        encoding="utf-8",
+    )
+    with pytest.raises(ValueError, match="'a b'"):
+        import_arpa(spark, str(arpa))
+
+
 def test_bloom_filter_contract(spark):
     """Bloom: no false negatives ever; FP rate in the expected regime;
     merge = union+distinct equals build-of-union; NULL keys are neither

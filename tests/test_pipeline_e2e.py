@@ -2,12 +2,16 @@
 sets, quarantine, enrichment, and partition-granular resume (north_rule
 correctness gates; X7 semantics es.clj:102-103)."""
 
+import os
+
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from logprocessor_spark.checkpoint import Ledger, read_metrics
 from logprocessor_spark.job import pipeline_aggregates, run_pipeline
 from logprocessor_spark.query import point_lookup, search
+from logprocessor_spark.schema import RULES_SCHEMA
 from logprocessor_spark.sinks import read_sink, to_ndjson
 from logprocessor_spark.synth import gen_pages, write_pages_partitioned
 
@@ -225,6 +229,37 @@ def test_unknown_partition_arg_rejected(spark, tmp_path):
         )
     with pytest.raises(ValueError, match="group_size"):
         run_pipeline(spark, f"{base}/pages", f"{base}/out", group_size=0)
+
+
+def test_pages_without_html_raise_before_writing(spark, tmp_path):
+    """Bad input fails loudly: a pages table that lacks a column the parse
+    reads must raise, not return with every row quarantined."""
+    base = str(tmp_path)
+    write_pages_partitioned(gen_pages(spark, 100, seed=7).drop("html"), f"{base}/pages")
+    with pytest.raises((AnalysisException, ValueError), match="html"):
+        run_pipeline(spark, f"{base}/pages", f"{base}/out")
+    assert not os.path.exists(f"{base}/out/routed")
+
+
+def test_caller_rules_apply_per_call(spark, tmp_path):
+    """Rules passed in are compiled on every call, never reused from an
+    earlier call or mixed up with the session's default rules."""
+    base = str(tmp_path)
+    write_pages_partitioned(gen_pages(spark, 200, seed=5), f"{base}/pages")
+
+    def sinks(out, rules):
+        run_pipeline(spark, f"{base}/pages", f"{base}/{out}", run_id=out, rules=rules)
+        routed = read_sink(spark, f"{base}/{out}/routed")
+        return {r.sink for r in routed.select("sink").distinct().collect()}
+
+    def every_row_to(sink):
+        return spark.createDataFrame([(1, "*", "*", sink)], RULES_SCHEMA)
+
+    assert sinks("a", every_row_to("sink_a")) == {"sink_a", "quarantine"}
+    assert sinks("b", every_row_to("sink_b")) == {"sink_b", "quarantine"}
+    defaults = {"sink_en", "sink_eu", "sink_ping", "sink_misc", "quarantine"}
+    assert sinks("default", None) <= defaults
+    assert sinks("c", every_row_to("sink_c")) == {"sink_c", "quarantine"}
 
 
 def test_pandas_parse_path_matches_native(spark, tmp_path):
