@@ -29,15 +29,24 @@ import os
 import tempfile
 import time
 from datetime import datetime, timezone
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .schema import METRICS_SCHEMA
 
 
+def local_path(path: str) -> str:
+    """The OS path of a plain path or a ``file:`` URI (``file:/a``,
+    ``file:///a``); any other path comes back unchanged. Spark resolves
+    both forms, but ``os`` and pyarrow read a ``file:`` URI as a relative
+    path under the current directory."""
+    return urlparse(path).path if path.startswith("file:") else path
+
+
 class Ledger:
     def __init__(self, directory: str):
-        self.dir = directory
+        self.dir = local_path(directory)
         os.makedirs(self.dir, exist_ok=True)
 
     def done_partitions(self) -> set[str]:
@@ -97,6 +106,7 @@ def append_metrics(
         ).coalesce(1).write.mode("append").parquet(path)
         return
 
+    path = local_path(path)
     full = [(*r, wall_ms) for r in rows]
     cols = list(zip(*full)) if full else [[]] * 7
     table = pa.table(

@@ -1,17 +1,16 @@
-"""HTML -> text extraction, byte-identical across three implementations.
+"""HTML -> text extraction, byte-identical across two implementations.
 
 This is the analog of the reference's ES ``html_strip`` char filter +
 ``classic`` tokenizer analyzer (es.clj:17-23): the only place the raw markup
 is turned into searchable text. BASELINE.json's per-row invariant is
 *byte-identical extracted text per url*, so the semantics are pinned here
-once and implemented three ways that must agree byte-for-byte:
+once and implemented two ways that must agree byte-for-byte:
 
-1. ``extract_text_py``        — pure Python (golden oracle, synth generator)
-2. ``extract_text_col``       — native Catalyst expressions (JVM, codegen —
-                                the production fast path; SURVEY §4
-                                "vectorized execution")
-3. ``extract_text_pandas_iter`` — Arrow-batched pandas implementation used
-                                by the mapInPandas parity path
+1. ``extract_text_py``  — pure Python (golden oracle, synth generator, and
+                          the per-row body of the mapInPandas parity path)
+2. ``extract_text_col`` — native Catalyst expressions (JVM, codegen — the
+                          production fast path; SURVEY §4 "vectorized
+                          execution")
 
 Rules (deliberately simple and locale-free so no library-version drift):
   a. one left-to-right pass replaces each <script>...</script> block,
@@ -36,7 +35,7 @@ from pyspark.sql import functions as F
 # applied in a single left-to-right pass: at each '<', the longest
 # applicable alternative (script block > style block > bare tag) wins.
 # A single pass is both the spec (pinned here, mirrored byte-identically in
-# all three implementations) and the fast path — every regexp_replace is a
+# both implementations) and the fast path — every regexp_replace is a
 # full-document rewrite, and markup stripping dominates parse-stage memory
 # traffic at high core counts.
 _RE_STRIP = r"(?is)<script\b[^>]*>.*?</script>|<style\b[^>]*>.*?</style>|<[^>]*>"
@@ -100,9 +99,3 @@ def extract_text_col(html: Column) -> Column:
     s = F.btrim(s, F.lit(" "))
     return s
 
-
-def extract_text_pandas_iter(series):
-    """pandas.Series[bytes|str] -> pandas.Series[str]; vectorized enough for
-    the Arrow parity path (regex engine is C, applied per batch not per job).
-    """
-    return series.map(extract_text_py)

@@ -2759,16 +2759,17 @@ _SQL_NLL_FX16 = (
 def q_kn_4gram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated Kneser-Ney 4-GRAM LM statistics with backoff through
     the continuation-count trigram and bigram levels
-    (operators/ngram_lm.py kn_fourgram_probs) — one order below CCNet's
+    (operators/ngram_lm.py kn_ngram_probs, order 4) — one order below CCNet's
     KenLM 5-gram, same recursion. Integer-exact 1e-9 emission; the
     oracle re-derives all five count relations and the three-level
     backoff chain bit-for-bit. Top 100 4-grams by count, lexicographic
     ties."""
-    from .operators.ngram_lm import kn_fourgram_probs
+    from .operators.ngram_lm import kn_ngram_probs
 
     d = _t(spark, sf_dir, "documents")
     return (
-        kn_fourgram_probs(d)
+        kn_ngram_probs(d, order=4)
+        .withColumnRenamed("c", "c1234")
         .orderBy(F.desc("c1234"), "w1", "w2", "w3", "w4")
         .limit(100)
     )
@@ -2828,7 +2829,7 @@ WITH w AS (
 ), t AS (
   SELECT CAST(count(*) AS BIGINT) AS tt FROM cbg
 ), j AS (
-  -- staged per-level HALF_UP rounding (ngram_lm.py kn_fourgram_probs):
+  -- staged per-level HALF_UP rounding (ngram_lm.py kn_ngram_probs):
   -- each backoff level emits integer 1e-9 units before composing, so no
   -- intermediate exceeds ~4*count*1e9 (the single-rational common
   -- denominator overflows BIGINT at modest corpora)

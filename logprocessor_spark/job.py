@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from .checkpoint import Ledger, append_metrics
+from .checkpoint import Ledger, append_metrics, local_path
 from .functions.parse import parse_pages, parse_pages_pandas
 from .operators.aggregate import sink_aggregates
 from .operators.enrich import enrich
@@ -87,8 +87,9 @@ def _committed_counts(
 ) -> list:
     """Per-(dt, sink) committed row counts for the written sink tree.
 
-    Local filesystems: walk the Hive layout driver-side and sum parquet
-    footer ``num_rows`` — zero Spark jobs, zero data pages (an Iceberg
+    Local filesystems: glob ``sink=*/month=*/dt=<d>`` for each batch day
+    driver-side and sum parquet footer ``num_rows`` — zero Spark jobs,
+    zero data pages, and no listing of days outside the batch (an Iceberg
     catalog would serve this from the partitions metadata table).
     Remote filesystems: fall back to a partition-pruned count job
     (``force_remote`` exists so tests exercise that branch on local paths)."""
@@ -104,31 +105,18 @@ def _committed_counts(
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         )
+    import glob
     import os
 
     from .sources import _footer_row_count
 
-    base = path[len("file:"):] if path.startswith("file:") else path
+    base = glob.escape(local_path(path))
     out: dict[tuple[str, str], int] = {}
-    try:
-        sink_dirs = os.listdir(base)
-    except OSError:
-        return []
-    for sdir in sink_dirs:
-        if not sdir.startswith("sink="):
-            continue
-        sink = sdir.split("=", 1)[1]
-        for mdir in os.listdir(os.path.join(base, sdir)):
-            if not mdir.startswith("month="):
-                continue
-            for ddir in os.listdir(os.path.join(base, sdir, mdir)):
-                if not ddir.startswith("dt="):
-                    continue
-                dt = ddir.split("=", 1)[1]
-                if dt not in batch:
-                    continue
-                full = os.path.join(base, sdir, mdir, ddir)
-                out[(dt, sink)] = out.get((dt, sink), 0) + _footer_row_count(full)
+    for dt in batch:
+        day_dirs = os.path.join(base, "sink=*", "month=*", f"dt={glob.escape(dt)}")
+        for full in glob.glob(day_dirs):
+            sink = full.rsplit(os.sep, 3)[1][len("sink="):]
+            out[(dt, sink)] = out.get((dt, sink), 0) + _footer_row_count(full)
     return [_Stat(dt, sink, n) for (dt, sink), n in sorted(out.items())]
 
 
@@ -139,7 +127,7 @@ def _discover_partitions(pages_path: str) -> list[str] | None:
     import os
 
     try:
-        names = os.listdir(pages_path)
+        names = os.listdir(local_path(pages_path))
     except OSError:
         return None
     dts = sorted(n.split("=", 1)[1] for n in names if n.startswith("dt="))

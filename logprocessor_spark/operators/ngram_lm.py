@@ -245,135 +245,6 @@ def kn_trigram_probs(
     return j2.select("w1", "w2", "w3", "c123", p_e9.alias("p_kn_e9"))
 
 
-def fourgram_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(w1, w2, w3, w4, c1234) — corpus 4-gram counts (positional)."""
-    w = df.select(split_words(F.col(text_col)).alias("__w")).where(
-        F.size("__w") >= 4
-    )
-    quads = w.select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("__w") - 3),
-                lambda i: F.struct(
-                    F.try_element_at(F.col("__w"), i.cast("int")).alias("w1"),
-                    F.try_element_at(F.col("__w"), (i + 1).cast("int")).alias("w2"),
-                    F.try_element_at(F.col("__w"), (i + 2).cast("int")).alias("w3"),
-                    F.try_element_at(F.col("__w"), (i + 3).cast("int")).alias("w4"),
-                ),
-            )
-        ).alias("qg")
-    ).select("qg.w1", "qg.w2", "qg.w3", "qg.w4")
-    return quads.groupBy("w1", "w2", "w3", "w4").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c1234")
-    )
-
-
-def kn_fourgram_probs(
-    df: DataFrame, text_col: str = "text", cache_registry: list | None = None
-) -> DataFrame:
-    """(w1..w4, c1234, p_kn_e9): interpolated Kneser-Ney 4-GRAM
-    probability, backoff through continuation-count trigram and bigram
-    levels to the bigram continuation distribution — one order below
-    CCNet's KenLM 5-gram, same machinery (the recursion adds one
-    continuation level per order; see ``kn_trigram_probs``). Integer-exact
-    1e-9 emission.
-
-    With d = 3/4 at every order (continuation counts at level k derived
-    from the raw (k+1)-gram relation, the Chen-Goodman convention the
-    trigram form already uses):
-
-        P4  = max(4*c1234-3,0)/(4*c123) + 3*n4f/(4*c123) * P3c
-        P3c = max(4*n234c-3,0)/(4*n23c) + 3*n3f/(4*n23c) * P2c
-        P2c = max(4*n34c-3,0)/(4*n3c)  + 3*n2f/(4*n3c)  * Pc
-        Pc  = n1b(w4) / T
-
-        num = max(4*c1234-3,0) * 16*n23c*n3c*T
-            + 3*n4f * ( max(4*n234c-3,0) * 4*n3c*T
-                        + 3*n3f * ( max(4*n34c-3,0)*T + 3*n2f*n1b ) )
-        den = 64 * c123 * n23c * n3c * T
-
-    Emission uses STAGED per-level rounding (unlike the lower orders'
-    single exact rational): each backoff level's probability is HALF_UP
-    rounded to integer 1e-9 units before the next level composes it —
-
-        pc_e9  = R(n1b * 1e9, T)
-        p2c_e9 = R(max(4*n34c-3,0)*1e9  + 3*n2f*pc_e9,  4*n3c)
-        p3c_e9 = R(max(4*n234c-3,0)*1e9 + 3*n3f*p2c_e9, 4*n23c)
-        p_e9   = R(max(4*c1234-3,0)*1e9 + 3*n4f*p3c_e9, 4*c123)
-
-    where R = HALF_UP integer division. The single-rational form's
-    common denominator 64*c123*n23c*n3c*T overflows BIGINT*1e9 already
-    at modest corpora (measured: sf0.1 of the gate data); staging bounds
-    every intermediate by ~4*count*1e9, i.e. safe while no single count
-    exceeds ~2.3e9 — multi-trillion-token territory. The cost is a
-    deterministic definition difference vs the exact rational of < 2
-    units at 1e-9 (0.5/level, attenuated by the ≤3/4 interpolation
-    weight), identical in both engines, so the hash gate still verifies
-    every count relation and the composition bit-for-bit. Past the 2.3e9
-    bound Spark's ANSI mode raises (never silently wrong) and a
-    production run emits the raw count relations, KenLM's own layout.
-
-    Scale shape: three explodes (4-gram, trigram, bigram positions), then
-    partial-aggregatable groupBys over short string keys; stat relations
-    join back on their gram keys. T is one collected scalar."""
-    c1234 = fourgram_counts(df, text_col).persist()
-    c123r = trigram_counts(df, text_col).persist()
-    bg = bigram_counts(df, text_col).persist()
-    if cache_registry is not None:
-        cache_registry.extend([c1234, c123r, bg])
-    # level 4: raw context totals + distinct continuations
-    ctx4 = c1234.groupBy("w1", "w2", "w3").agg(
-        F.sum("c1234").cast("bigint").alias("c123"),
-        F.count(F.lit(1)).cast("bigint").alias("n4f"),
-    )
-    # level 3 (continuation from raw 4-grams): N1+(. w2 w3 w4)
-    n234c = c1234.groupBy("w2", "w3", "w4").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n234c")
-    )
-    ctx3 = n234c.groupBy("w2", "w3").agg(
-        F.sum("n234c").cast("bigint").alias("n23c"),
-        F.count(F.lit(1)).cast("bigint").alias("n3f"),
-    )
-    # level 2 (continuation from raw trigrams): N1+(. w3 w4)
-    n34c = c123r.groupBy(
-        F.col("w2").alias("w3"), F.col("w3").alias("w4")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("n34c"))
-    ctx2 = n34c.groupBy("w3").agg(
-        F.sum("n34c").cast("bigint").alias("n3c"),
-        F.count(F.lit(1)).cast("bigint").alias("n2f"),
-    )
-    # level 1: bigram continuation distribution
-    n1b = bg.groupBy(F.col("w2").alias("w4")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n1b")
-    )
-    t_types = bg.count()
-    j = (
-        c1234.join(ctx4, ["w1", "w2", "w3"])
-        .join(n234c, ["w2", "w3", "w4"])
-        .join(ctx3, ["w2", "w3"])
-        .join(n34c, ["w3", "w4"])
-        .join(ctx2, "w3")
-        .join(n1b, "w4")
-    )
-    t = F.lit(int(t_types))
-
-    e9 = F.lit(1_000_000_000).cast("bigint")
-    pc_e9 = _half_up(F.col("n1b") * e9, t.cast("bigint"))
-    p2c_e9 = _half_up(
-        _disc(F.col("n34c")) * e9 + F.lit(DISCOUNT_NUM) * F.col("n2f") * pc_e9,
-        F.lit(DISCOUNT_DEN) * F.col("n3c"),
-    )
-    p3c_e9 = _half_up(
-        _disc(F.col("n234c")) * e9 + F.lit(DISCOUNT_NUM) * F.col("n3f") * p2c_e9,
-        F.lit(DISCOUNT_DEN) * F.col("n23c"),
-    )
-    p_e9 = _half_up(
-        _disc(F.col("c1234")) * e9 + F.lit(DISCOUNT_NUM) * F.col("n4f") * p3c_e9,
-        F.lit(DISCOUNT_DEN) * F.col("c123"),
-    )
-    return j.select("w1", "w2", "w3", "w4", "c1234", p_e9.alias("p_kn_e9"))
-
-
 def ngram_counts(df: DataFrame, k: int, text_col: str = "text") -> DataFrame:
     """(w1..wk, c) — positional k-gram counts for any k >= 1."""
     if k < 1:
@@ -405,25 +276,53 @@ def kn_ngram_probs(
     cache_registry: list | None = None,
 ) -> DataFrame:
     """(w1..w{order}, c, p_kn_e9): interpolated Kneser-Ney probabilities
-    for ANY order >= 2 with staged per-level integer emission — the
-    generalization of ``kn_fourgram_probs``'s recursion; order=5 is the
-    CCNet/KenLM-grade model.
+    for ANY order >= 2 with staged per-level integer emission; order=4 is
+    one order below CCNet's KenLM 5-gram, order=5 is the CCNet/KenLM-grade
+    model (the recursion adds one continuation level per order; see
+    ``kn_trigram_probs``).
 
     Level structure for model order n (Chen-Goodman convention, the one
-    the hand-built orders 2-4 use): the top level reads raw n-gram
-    counts; each level k in n-1..2 reads continuation counts N1+(. s)
-    for the k-gram suffix s, derived from the RAW (k+1)-gram relation;
-    the base is the bigram continuation distribution n1b/T. Emission is
-    staged HALF_UP at integer 1e-9 units per level (see
-    ``kn_fourgram_probs`` for the overflow analysis: every intermediate
-    stays under ~4*count*1e9, so any order survives corpora where no
-    single count exceeds ~2.3e9).
+    the exact-rational orders 2-3 use, d = 3/4 at every order): the top
+    level reads raw n-gram counts; each level k in n-1..2 reads
+    continuation counts N1+(. s) for the k-gram suffix s, derived from the
+    RAW (k+1)-gram relation; the base is the bigram continuation
+    distribution n1b/T. For order 4:
 
-    Parity contract: for order 4 this produces BIT-IDENTICAL output to
-    ``kn_fourgram_probs`` (pytest-asserted); for orders 2-3 it differs
-    from the exact-rational forms by < 2 units at 1e-9 (staged vs single
-    rounding — also pytest-bounded). Use the exact forms when the
-    emission must match their SQL oracles; use this for order >= 4.
+        P4  = max(4*c1234-3,0)/(4*c123) + 3*n4f/(4*c123) * P3c
+        P3c = max(4*n234c-3,0)/(4*n23c) + 3*n3f/(4*n23c) * P2c
+        P2c = max(4*n34c-3,0)/(4*n3c)  + 3*n2f/(4*n3c)  * Pc
+        Pc  = n1b(w4) / T
+
+        num = max(4*c1234-3,0) * 16*n23c*n3c*T
+            + 3*n4f * ( max(4*n234c-3,0) * 4*n3c*T
+                        + 3*n3f * ( max(4*n34c-3,0)*T + 3*n2f*n1b ) )
+        den = 64 * c123 * n23c * n3c * T
+
+    Emission uses STAGED per-level rounding (unlike the exact-rational
+    orders 2-3): each backoff level's probability is HALF_UP rounded to
+    integer 1e-9 units before the next level composes it — for order 4
+
+        pc_e9  = R(n1b * 1e9, T)
+        p2c_e9 = R(max(4*n34c-3,0)*1e9  + 3*n2f*pc_e9,  4*n3c)
+        p3c_e9 = R(max(4*n234c-3,0)*1e9 + 3*n3f*p2c_e9, 4*n23c)
+        p_e9   = R(max(4*c1234-3,0)*1e9 + 3*n4f*p3c_e9, 4*c123)
+
+    where R = HALF_UP integer division. The single-rational form's
+    common denominator 64*c123*n23c*n3c*T overflows BIGINT*1e9 already
+    at modest corpora (measured at order 4: sf0.1 of the gate data);
+    staging bounds every intermediate by ~4*count*1e9, i.e. any order is
+    safe while no single count exceeds ~2.3e9 — multi-trillion-token
+    territory. The cost is a deterministic definition difference vs the
+    exact rational of < 2 units at 1e-9 (0.5/level, attenuated by the
+    <=3/4 interpolation weight), identical in both engines, so the hash
+    gate still verifies every count relation and the composition
+    bit-for-bit. Past the 2.3e9 bound Spark's ANSI mode raises (never
+    silently wrong) and a production run emits the raw count relations,
+    KenLM's own layout.
+
+    Parity contract: for orders 2-3 this differs from the exact-rational
+    forms by < 2 units at 1e-9 (pytest-bounded). Use the exact forms when
+    the emission must match their SQL oracles; use this for order >= 4.
 
     Scale shape: one explode per k in {2..n} (narrow), then
     partial-aggregatable groupBys over short string keys; 2(n-1) stat

@@ -24,6 +24,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .checkpoint import local_path
+
 
 @dataclass
 class StageSnapshot:
@@ -83,7 +85,7 @@ class ProgressTracker:
             import pyarrow as pa
             import pyarrow.parquet as pq
 
-            path = f"{self.out_dir}/heartbeats"
+            path = f"{local_path(self.out_dir)}/heartbeats"
             os.makedirs(path, exist_ok=True)
             pq.write_table(
                 pa.table({k: [v] for k, v in row.items()}),

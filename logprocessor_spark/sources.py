@@ -46,6 +46,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .checkpoint import local_path
 from .functions.textextract import extract_text_col
 from .functions.textstats import lang_id
 
@@ -155,7 +156,7 @@ def read_raw_pages_bundled(
     import os
     from datetime import datetime, timezone
 
-    base = path[len("file:"):] if path.startswith("file:") else path
+    base = local_path(path)
     files: list[tuple[str, float, int]] = []
     for root, _dirs, names in os.walk(base):
         for nm in sorted(names):
@@ -248,9 +249,8 @@ def _footer_row_count(path: str) -> int:
 
     import pyarrow.parquet as pq
 
-    base = path[len("file:"):] if path.startswith("file:") else path
     total = 0
-    for root, _dirs, files in os.walk(base):
+    for root, _dirs, files in os.walk(local_path(path)):
         for f in files:
             if f.endswith(".parquet"):
                 total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows

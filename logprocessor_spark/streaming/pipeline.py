@@ -117,7 +117,10 @@ def running_user_stats(
     Arrow-batched (never per-row Python); state is two numbers per user,
     evicted by processing-time timeout (default 2 h = twice the default
     watermark) so memory stays bounded by *active* users, not all users
-    ever seen — the property that matters at 10^9 distinct keys."""
+    ever seen — the property that matters at 10^9 distinct keys. The
+    processing-time timeout makes every batch schedule a no-data batch, so
+    under ``Trigger.availableNow`` the query never stops by itself (nor
+    does ``processAllAvailable`` return): stop it once its input is done."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 

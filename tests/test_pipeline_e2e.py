@@ -438,3 +438,30 @@ def test_committed_counts_remote_branch_pins_dt_to_string(spark, pipe):
     }
     assert remote == local and len(remote) > 0
     assert all(isinstance(k[0], str) for k in remote)
+
+
+def test_file_uri_paths_stay_under_out_dir(spark, tmp_path, monkeypatch):
+    """``file://`` pages and out paths: the ledger, metrics and heartbeats
+    land under the out dir (not in a ``file:`` directory under the current
+    one), partition discovery reads the directory names, and a second call
+    skips every day."""
+    from logprocessor_spark.job import _discover_partitions
+    from logprocessor_spark.progress import ProgressTracker, read_heartbeats
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    write_pages_partitioned(gen_pages(spark, 300, seed=11), str(tmp_path / "pages"))
+    pages, out = f"file://{tmp_path}/pages", f"file://{tmp_path}/out"
+    dts = sorted(d[3:] for d in os.listdir(tmp_path / "pages") if d.startswith("dt="))
+    assert _discover_partitions(pages) == dts
+
+    tracker = ProgressTracker(spark, run_id="uri", out_dir=out)
+    res = run_pipeline(spark, pages, out, run_id="uri", progress=tracker)
+    assert res.processed_partitions == dts and res.rows_in == 300
+    assert sorted(os.listdir(tmp_path / "out" / "ledger")) == [f"{d}.json" for d in dts]
+    assert read_metrics(spark, f"{out}/metrics").count() > 0
+    assert sum(h.rows for h in read_heartbeats(spark, out).collect()) == 300
+    again = run_pipeline(spark, pages, out, run_id="uri2")
+    assert again.processed_partitions == [] and again.skipped_partitions == dts
+    assert os.listdir(cwd) == []

@@ -1,21 +1,13 @@
-"""Sink-backend contract: the Parquet dynamic-overwrite fallback and the
-Iceberg-shaped snapshot/merge backend must be interchangeable behind
-``SinkBackend`` (VERDICT r3 item 5 — prove the seam swaps, don't assert
-it in prose). Every case runs through BOTH backends; the last test
-cross-checks their final row sets on a multi-run upsert scenario.
+"""Sink upsert contract, run against the one sink implementation:
+``sinks.write_fanout`` (dynamic partition overwrite + cross-day
+reconcile) and ``sinks.read_sink``.
 
 Reference semantics under test: monthly ES index ``_id`` upsert
 (es.clj:99-104) — one survivor per (sink, month, message_id), latest
 ingest day wins, quarantine rows (null key) never collapse.
 """
 
-import pytest
-from pyspark.sql import functions as F
-
-from logprocessor_spark.sinks_backend import (
-    ParquetDynamicBackend,
-    SnapshotMergeBackend,
-)
+from logprocessor_spark.sinks import read_sink, write_fanout
 
 SCHEMA = (
     "url string, message_id string, payload string, "
@@ -33,15 +25,6 @@ def _rowset(df):
     }
 
 
-@pytest.fixture(params=["parquet-dynamic", "snapshot-merge"])
-def backend(request):
-    return (
-        ParquetDynamicBackend()
-        if request.param == "parquet-dynamic"
-        else SnapshotMergeBackend()
-    )
-
-
 BATCH1 = [
     ("u1", "m1", "x", "sink_en", "2015.11", "2015-11-01"),
     ("u2", "m2", "y", "sink_en", "2015.11", "2015-11-01"),
@@ -51,94 +34,62 @@ BATCH1 = [
 ]
 
 
-def test_roundtrip_and_sink_prune(spark, backend, tmp_out):
-    backend.write_fanout(_df(spark, BATCH1), tmp_out, batch_dts=["2015-11-01", "2015-12-01"])
-    assert _rowset(backend.read(spark, tmp_out)) == {
+def test_roundtrip_and_sink_prune(spark, tmp_out):
+    write_fanout(_df(spark, BATCH1), tmp_out, batch_dts=["2015-11-01", "2015-12-01"])
+    assert _rowset(read_sink(spark, tmp_out)) == {
         (r[3], r[4], r[5], r[1], r[0]) for r in BATCH1
     }
-    assert {r.url for r in backend.read(spark, tmp_out, sink="sink_eu").collect()} == {"u3"}
+    assert {r.url for r in read_sink(spark, tmp_out, sink="sink_eu").collect()} == {"u3"}
 
 
-def test_same_day_replay_is_idempotent(spark, backend, tmp_out):
+def test_same_day_replay_is_idempotent(spark, tmp_out):
     dts = ["2015-11-01", "2015-12-01"]
-    backend.write_fanout(_df(spark, BATCH1), tmp_out, batch_dts=dts)
-    once = _rowset(backend.read(spark, tmp_out))
-    backend.write_fanout(_df(spark, BATCH1), tmp_out, batch_dts=dts)  # replay
-    assert _rowset(backend.read(spark, tmp_out)) == once
+    write_fanout(_df(spark, BATCH1), tmp_out, batch_dts=dts)
+    once = _rowset(read_sink(spark, tmp_out))
+    write_fanout(_df(spark, BATCH1), tmp_out, batch_dts=dts)  # replay
+    assert _rowset(read_sink(spark, tmp_out)) == once
 
 
-def test_monthly_upsert_latest_dt_wins_within_batch(spark, backend, tmp_out):
+def test_monthly_upsert_latest_dt_wins_within_batch(spark, tmp_out):
     rows = BATCH1 + [("u1b", "m1", "x2", "sink_en", "2015.11", "2015-11-02")]
-    backend.write_fanout(
+    write_fanout(
         _df(spark, rows), tmp_out, batch_dts=["2015-11-01", "2015-11-02", "2015-12-01"]
     )
-    got = _rowset(backend.read(spark, tmp_out))
+    got = _rowset(read_sink(spark, tmp_out))
     assert ("sink_en", "2015.11", "2015-11-02", "m1", "u1b") in got
     assert not any(u == "u1" for (_, _, _, _, u) in got)  # earlier dt lost
     # other keys, other months, and both null-key rows untouched
     assert len(got) == len(BATCH1)
 
 
-def test_committed_scope_upserts_across_runs(spark, backend, tmp_out):
-    backend.write_fanout(
-        _df(spark, BATCH1), tmp_out, batch_dts=["2015-11-01", "2015-12-01"]
-    )
+def test_committed_scope_upserts_across_runs(spark, tmp_out):
+    write_fanout(_df(spark, BATCH1), tmp_out, batch_dts=["2015-11-01", "2015-12-01"])
     run2 = [("u1c", "m1", "x3", "sink_en", "2015.11", "2015-11-03")]
-    backend.write_fanout(
-        _df(spark, run2),
-        tmp_out,
-        batch_dts=["2015-11-03"],
-        committed_scope=True,
-    )
-    got = _rowset(backend.read(spark, tmp_out))
+    write_fanout(_df(spark, run2), tmp_out, batch_dts=["2015-11-03"], committed_scope=True)
+    got = _rowset(read_sink(spark, tmp_out))
     survivors_m1 = [g for g in got if g[3] == "m1"]
     assert survivors_m1 == [("sink_en", "2015.11", "2015-11-03", "m1", "u1c")]
     assert len(got) == len(BATCH1)  # m1 replaced, everything else intact
 
 
-def test_backends_agree_on_multi_run_scenario(spark, tmp_path):
-    """The hard equivalence: identical inputs through both backends ->
-    identical final tables, across two runs with a replay, a cross-run
-    upsert, and null keys."""
-    run1 = BATCH1
+def test_multi_run_scenario_final_rowset(spark, tmp_out):
+    """Two runs with a replay, a cross-run upsert and null keys end in
+    exactly the expected table."""
     run2 = [
         ("u1c", "m1", "x3", "sink_en", "2015.11", "2015-11-03"),  # upserts m1
         ("u6", "m6", "w", "sink_misc", "2015.11", "2015-11-03"),  # new key
         ("u7", None, "q", "quarantine", "unknown", "2015-11-03"),  # null key
     ]
-    results = {}
-    for name, be in (
-        ("pq", ParquetDynamicBackend()),
-        ("snap", SnapshotMergeBackend()),
-    ):
-        out = str(tmp_path / name)
-        be.write_fanout(_df(spark, run1), out, batch_dts=["2015-11-01", "2015-12-01"])
-        be.write_fanout(_df(spark, run1), out, batch_dts=["2015-11-01", "2015-12-01"])
-        be.write_fanout(
-            _df(spark, run2), out, batch_dts=["2015-11-03"], committed_scope=True
-        )
-        results[name] = _rowset(be.read(spark, out))
-    assert results["pq"] == results["snap"] and len(results["pq"]) == 7
-
-
-def test_snapshot_reads_never_see_partial_state_and_expire(spark, tmp_path):
-    """Snapshot mechanics: a reader holding the old CURRENT keeps a
-    consistent view while a new snapshot lands; expire_snapshots drops
-    everything but the live one."""
-    import os
-
-    be = SnapshotMergeBackend()
-    out = str(tmp_path / "snap")
-    be.write_fanout(_df(spark, BATCH1), out, batch_dts=["2015-11-01", "2015-12-01"])
-    old = be.read(spark, out).count()
-    be.write_fanout(
-        _df(spark, [("u6", "m6", "w", "sink_misc", "2015.11", "2015-11-03")]),
-        out,
-        batch_dts=["2015-11-03"],
-        committed_scope=True,
-    )
-    assert be.read(spark, out).count() == old + 1
-    snaps = os.listdir(f"{out}/snapshots")
-    assert len(snaps) == 2  # history retained until expiry
-    assert be.expire_snapshots(out) == 1
-    assert be.read(spark, out).count() == old + 1  # live snapshot intact
+    dts1 = ["2015-11-01", "2015-12-01"]
+    write_fanout(_df(spark, BATCH1), tmp_out, batch_dts=dts1)
+    write_fanout(_df(spark, BATCH1), tmp_out, batch_dts=dts1)  # replay
+    write_fanout(_df(spark, run2), tmp_out, batch_dts=["2015-11-03"], committed_scope=True)
+    assert _rowset(read_sink(spark, tmp_out)) == {
+        ("sink_en", "2015.11", "2015-11-03", "m1", "u1c"),
+        ("sink_en", "2015.11", "2015-11-01", "m2", "u2"),
+        ("sink_eu", "2015.12", "2015-12-01", "m3", "u3"),
+        ("quarantine", "unknown", "2015-11-01", None, "u4"),
+        ("quarantine", "unknown", "2015-11-01", None, "u5"),
+        ("sink_misc", "2015.11", "2015-11-03", "m6", "u6"),
+        ("quarantine", "unknown", "2015-11-03", None, "u7"),
+    }

@@ -1,6 +1,8 @@
 """Streaming pipeline tests: the stream must produce the same routed rows
 as the batch run over identical input (one logical plan, two modes)."""
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,6 +21,18 @@ from logprocessor_spark.synth import (
     gen_pages,
     write_pages_partitioned,
 )
+
+
+def _await_input_drained(q, timeout_s=120):
+    """Block until ``q`` has run a batch without input rows. Under
+    availableNow that batch comes only after every input file has been
+    processed; a query with processing-time state timeouts keeps running
+    such no-data batches and never terminates by itself."""
+    deadline = time.monotonic() + timeout_s
+    while not any(p["numInputRows"] == 0 for p in q.recentProgress):
+        assert q.isActive, q.exception()
+        assert time.monotonic() < deadline, "stream did not drain its input"
+        time.sleep(0.1)
 
 
 @pytest.fixture(scope="module")
@@ -42,7 +56,10 @@ def test_stream_matches_batch(spark, setup):
         gen_agent_dim(spark),
         default_rules(spark),
     )
-    q.awaitTermination(120)
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
     got = set(
         spark.read.parquet(f"{base}/stream_out").select("sink", "url").collect()
     )
@@ -63,7 +80,10 @@ def test_windowed_counts(spark, setup):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
     rows = spark.sql("SELECT * FROM win_counts").collect()
     assert rows
     total = sum(r.doc_count for r in rows)
@@ -90,7 +110,10 @@ def test_sessionize_stream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
     rows = spark.sql("SELECT * FROM sessions").collect()
     assert rows
     assert all(r.session_end > r.session_start and r.n_events >= 1 for r in rows)
@@ -117,7 +140,10 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
     rows = spark.sql("SELECT message_id, count(*) c FROM dedup_t WHERE message_id IS NOT NULL GROUP BY 1 HAVING count(*) > 1").collect()
     assert rows == []
     total = spark.sql("SELECT count(DISTINCT message_id) c FROM dedup_t").collect()[0].c
@@ -145,14 +171,12 @@ def test_running_user_stats_stateful(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    # last update per user must equal the batch totals
-    got = {
-        r.user_id: (r.n_events, r.total_value)
-        for r in spark.sql(
-            "SELECT user_id, n_events, total_value FROM running_t"
-        ).collect()
-    }  # memory sink in update mode appends updates; keep the max n_events
+    try:
+        _await_input_drained(q)
+    finally:
+        q.stop()
+    # last update per user must equal the batch totals; the memory sink in
+    # update mode appends updates, so keep the max n_events
     last = {}
     for r in spark.sql("SELECT * FROM running_t").collect():
         if r.user_id not in last or r.n_events > last[r.user_id][0]:
@@ -192,7 +216,10 @@ def test_stream_curate_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
     got = {(r.doc_id, r.text, r.pii.n_email) for r in spark.read.parquet(out_dir).collect()}
     t = F.concat(F.col("text"), F.lit(" mail x@y.io"))
     batch = (
@@ -245,7 +272,10 @@ def test_stream_dedup_against_index_accretes(spark, tmp_path):
             .parquet(src)
         )
         q = stream_dedup_against_index(stream, idx, out, str(tmp_path / "ckpt"))
-        q.awaitTermination(120)
+        try:
+            q.awaitTermination(120)
+        finally:
+            q.stop()
 
     run()
     got1 = {r["doc_id"] for r in spark.read.parquet(out).collect()}
@@ -289,7 +319,10 @@ def test_stream_dedup_canonical_url(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
     got = spark.sql("SELECT url_canon, count(*) c FROM urldedup_t GROUP BY 1").collect()
     canon = {r["url_canon"]: r["c"] for r in got}
     assert canon == {"https://a.com/p": 1, "https://b.com/q": 1}
@@ -335,7 +368,10 @@ def test_stream_lm_gate_matches_batch(spark, tmp_path):
     )
     out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     q = stream_lm_gate(stream, lm, cutoff, out_dir, ckpt)
-    q.awaitTermination(120)
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
     got = {
         (r.doc_id, r.n_bigrams, r.avg_nll_fx16)
         for r in spark.read.parquet(out_dir).collect()
@@ -388,6 +424,9 @@ def test_stream_bloom_gate_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
     got = {r.doc_id for r in spark.read.parquet(out_dir).collect()}
     assert got == want

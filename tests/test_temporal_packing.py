@@ -297,13 +297,13 @@ def test_kn_trigram_probs_sum_to_context_mass(spark):
 
 
 def test_kn_fourgram_brute_force(spark):
-    """kn_fourgram_probs against an independent pure-Python
+    """kn_ngram_probs(order=4) against an independent pure-Python
     reimplementation of the staged-rounding KN backoff chain, computed
     from raw token lists (all five count relations re-derived with
     dict/Counter arithmetic) on a corpus with real 4-gram repeats."""
     from collections import Counter
 
-    from logprocessor_spark.operators.ngram_lm import kn_fourgram_probs
+    from logprocessor_spark.operators.ngram_lm import kn_ngram_probs
 
     texts = [
         "a b c d a b c d e",
@@ -371,11 +371,11 @@ def test_kn_fourgram_brute_force(spark):
 
     rows = {
         (r["w1"], r["w2"], r["w3"], r["w4"]): r
-        for r in kn_fourgram_probs(docs).collect()
+        for r in kn_ngram_probs(docs, order=4).collect()
     }
     assert set(rows) == set(c1234)
     for g, r in rows.items():
-        assert r["c1234"] == c1234[g], g
+        assert r["c"] == c1234[g], g
         assert r["p_kn_e9"] == expected(*g), g
     assert all(0 < r["p_kn_e9"] <= 10**9 for r in rows.values())
     # the repeated 4-gram (a b c d) must dominate its alternatives
@@ -384,16 +384,15 @@ def test_kn_fourgram_brute_force(spark):
 
 
 def test_kn_ngram_generic_matches_specific_orders(spark):
-    """The generic order-N builder against the hand-built orders: order 4
-    must be BIT-IDENTICAL to kn_fourgram_probs (same staged emission —
-    two independent constructions of the same chain), and orders 2-3 must
-    sit within 2 units at 1e-9 of the exact-rational forms (staged
-    rounding's documented bound: 0.5/level attenuated by <= 3/4)."""
+    """The generic order-N builder against the exact-rational orders:
+    orders 2-3 must sit within 2 units at 1e-9 of the exact-rational forms
+    (staged rounding's documented bound: 0.5/level attenuated by <= 3/4).
+    Order 4 is checked against a pure-Python reference in
+    test_kn_fourgram_brute_force."""
     import pytest as _pt
 
     from logprocessor_spark.operators.ngram_lm import (
         kn_bigram_probs,
-        kn_fourgram_probs,
         kn_ngram_probs,
         kn_trigram_probs,
     )
@@ -403,15 +402,6 @@ def test_kn_ngram_generic_matches_specific_orders(spark):
          (2, "a b c e d a b"), (3, "c d a b c d"), (4, "e f a b c d e f")],
         "doc_id long, text string",
     )
-    g4 = {
-        (r["w1"], r["w2"], r["w3"], r["w4"]): (r["c"], r["p_kn_e9"])
-        for r in kn_ngram_probs(docs, order=4).collect()
-    }
-    s4 = {
-        (r["w1"], r["w2"], r["w3"], r["w4"]): (r["c1234"], r["p_kn_e9"])
-        for r in kn_fourgram_probs(docs).collect()
-    }
-    assert g4 == s4
     for order, exact_fn, cnt_col in (
         (2, kn_bigram_probs, "c12"),
         (3, kn_trigram_probs, "c123"),

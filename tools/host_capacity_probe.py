@@ -6,8 +6,8 @@ N in (1, 8, 16, 24, 32). Pure userspace ALU work, zero memory/IO
 pressure, zero JVM involvement. ``effective_cores_at_K_busy`` =
 K * t(1) / mean t(K).
 
-Why this exists: scaling measurements (bench.py --mode scaling /
-scaling-mp) ran into a wall that is NOT the engine. On this sandbox the
+Why this exists: scaling measurements (bench.py --mode scaling-mp and
+the single-JVM cores ladder before it) ran into a wall that is NOT the engine. On this sandbox the
 same pipeline JVM, taskset-pinned to its own disjoint cpuset, burns
 2.2x more CPU-seconds per document as soon as TOTAL host-busy cores
 exceed ~16 (measured: 1-way and 2-way concurrent 8-core JVMs run at

@@ -1,7 +1,7 @@
 """Reproducible Iceberg-availability probe (r4 VERDICT #7): try to stand
 up a real Iceberg catalog and CREATE TABLE ... USING iceberg in this
 environment, and record the outcome so the Parquet-fallback claim in
-``sinks_backend.py`` is evidence, not assertion. Writes/refreshes
+``sinks.py`` is evidence, not assertion. Writes/refreshes
 BENCH/ICEBERG_PROBE.md::
 
     python tools/iceberg_probe.py
@@ -70,12 +70,15 @@ and attempts `CREATE TABLE ... USING iceberg`.
   runtime jar cannot be vendored in.
 - Probe outcome: **{outcome}**
 
-Consequence: every sink in this repo runs the Parquet-fallback backend.
-The backend seam is contract-tested (`logprocessor_spark/sinks_backend.py`,
-`tests/test_sinks_backend.py`) so an Iceberg-backed implementation swaps
-in behind the same interface on a cluster that ships
-`iceberg-spark-runtime`; the real `MERGE INTO` path remains unexercised
-here by environment, not by design.
+Consequence: every sink in this repo writes the Parquet fallback. The
+Iceberg swap point is the writer call in `sinks.write_fanout`
+(`logprocessor_spark/sinks.py`): dynamic partition overwrite today,
+`writeTo(tbl).overwritePartitions()` on a cluster that ships
+`iceberg-spark-runtime`. The upsert contract that call must keep (replay
+idempotence, latest `dt` wins per monthly index, committed-scope upsert
+across runs, null keys never collapsed) is pinned by
+`tests/test_sinks_backend.py`. The real `MERGE INTO` path remains
+unexercised here by environment, not by design.
 """)
     print(outcome)
 
